@@ -154,10 +154,14 @@ object ParentStacks {
       case Some(pred) =>
         // phase 1: path-only discovery (column-pruned scan, no content)
         val dirPaths = discoveryPlan(files, pred).collect().map(_.getString(0))
-        // phase 2: fetch content for ONLY the discovered paths. The
-        // `isin` compiles to an In filter a columnar source pushes
-        // down (row-group skipping), so the content bytes of
-        // non-directory files are never materialized.
+        // phase 2: fetch content for ONLY the discovered paths. Over a
+        // columnar source whose `path` is a stored column, the `isin`
+        // compiles to an In filter the scan pushes down (row-group
+        // skipping). On the `binaryFile` corpus of `Corpus.read`,
+        // `path` is derived by `regexp_replace`, so nothing is pushed:
+        // uncached (as in mr01) this phase reads every file's content
+        // and filters after the scan. Under `MapReduceRunner` it reads
+        // the shared cached copy instead.
         val dirRows = (if (dirPaths.isEmpty)
           Array.empty[(String, Int, String, Array[Byte])]
         else files
@@ -185,10 +189,16 @@ object ParentStacks {
 /** Multi-job executor (reference `MapReduce(filesystem, jobs)`,
   * mapreduce.go:12-221): N jobs over ONE traversal. The reference
   * pays listing+open+parse once and fans results out to each job's
-  * pipeline; here the corpus DataFrame is materialized once
-  * (MEMORY_AND_DISK) and every job's plan reads the cached copy —
-  * the multi-query optimization Catalyst doesn't do across actions
-  * (SURVEY.md §4).
+  * pipeline; here the corpus DataFrame is persisted (MEMORY_AND_DISK)
+  * and every job's plan reads the cached copy — the multi-query
+  * optimization Catalyst doesn't do across actions (SURVEY.md §4).
+  *
+  * There is no eager materialize pass: the first job to reach a
+  * partition builds its cache block, and Spark's block write lock
+  * makes any other job that reaches the same partition wait for that
+  * block and read it, so the tree is still read once. An eager
+  * `count()` would add three Spark jobs under AQE before any job
+  * starts.
   */
 object MapReduceRunner {
 
@@ -206,17 +216,21 @@ object MapReduceRunner {
     *
     * First error cancels everything (reference mapreduce.go:215-220):
     * all actions share one Spark job group; the first failure cancels
-    * the group, interrupting the surviving jobs' tasks. */
+    * the group, interrupting the surviving jobs' tasks.
+    *
+    * A corpus the caller already cached is used as is and left cached:
+    * the runner unpersists only a cache it created. */
   def run(spark: SparkSession, corpus: DataFrame, jobs: Seq[CorpusJob])
       : Map[String, Any] = {
-    val cached = corpus.persist(StorageLevel.MEMORY_AND_DISK)
+    val ownsCache = corpus.storageLevel == StorageLevel.NONE
+    val cached =
+      if (ownsCache) corpus.persist(StorageLevel.MEMORY_AND_DISK) else corpus
     try {
-      cached.count() // materialize once, before any job reads it
       val par = spark.conf.get("spark.graft.mr.concurrency", "8")
         .toInt.min(jobs.size)
       if (par <= 1) jobs.map(j => j.name -> j.run(cached)).toMap
       else runConcurrent(spark, cached, jobs, par)
-    } finally { cached.unpersist(); () }
+    } finally if (ownsCache) { cached.unpersist(); () }
   }
 
   private def runConcurrent(spark: SparkSession, cached: DataFrame,

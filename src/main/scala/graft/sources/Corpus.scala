@@ -88,7 +88,7 @@ object Corpus {
       case _ => reader
     }
     val base = withDerivedColumns(
-      pushed.load(loadRoot).select(
+      sizedByBytes(pushed.load(loadRoot)).select(
         regexp_replace(col("path"), java.util.regex.Pattern.quote(rootUri + "/"), "")
           .as("path"),
         col("length"), col("content")))
@@ -101,6 +101,24 @@ object Corpus {
         base.filter(matchesPath(col("path")))
       case None => base
     }
+  }
+
+  /** Partition a file scan by bytes, not by file count: coalesce to
+    * `max(defaultParallelism, ceil(bytes / spark.sql.files.maxPartitionBytes))`.
+    * Spark packs splits charging every file `openCostInBytes` (4 MB),
+    * so a tree of small files plans one task per ~32 files however few
+    * bytes they hold (2,000 files of 300 bytes → 64 tasks of ~2 ms),
+    * and a 100 TB tree of 10 KB files would run ~3×10⁸ tasks per job.
+    * `coalesce` is a no-op when the scan already has that many
+    * partitions or fewer, so large-file corpora keep their splits. The
+    * byte count is the file index's, read from the analyzed plan's
+    * stats: listing has already happened, so sizing costs no job. */
+  private def sizedByBytes(scan: DataFrame): DataFrame = {
+    val spark = scan.sparkSession
+    val bytes = scan.queryExecution.analyzed.stats.sizeInBytes
+    val split = BigInt(spark.sessionState.conf.filesMaxPartitionBytes)
+    val byBytes = ((bytes + split - 1) / split).min(BigInt(Int.MaxValue)).toInt
+    scan.coalesce(byBytes.max(spark.sparkContext.defaultParallelism))
   }
 
   /** In-memory corpus (the reference's StaticVirtualFileSystem,

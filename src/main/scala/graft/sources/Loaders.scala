@@ -10,9 +10,10 @@ import org.apache.spark.sql.types.{DataType, StringType}
   *
   * Where the reference runs one Go closure per file and shares the
   * parsed value across jobs, here the parse is a Catalyst expression
-  * over the shared (persisted) corpus: `MapReduceRunner` materializes
-  * the loaded frame once and every job reads it — same
-  * parse-once-share-many economics, but codegen'd and spillable.
+  * over the shared (persisted) corpus: under `MapReduceRunner` the
+  * first job to reach a partition caches the loaded frame's block and
+  * every other job reads that block — same parse-once-share-many
+  * economics, but codegen'd and spillable.
   */
 object Loaders {
 

@@ -358,4 +358,98 @@ class MapReduceSpec extends AnyFunSuite {
       .map(_.getMessage).mkString(" | ")
     assert(chain.contains("boom") && chain.contains("f2.txt"))
   }
+
+  /** A temp tree of `n` files of `size` bytes each, spread over ten
+    * folders, plus one root `ctx.txt`; deleted after `body`, which gets
+    * the root and the tree's total bytes. */
+  private def withTree[T](n: Int, size: Int)(body: (String, Long) => T): T = {
+    import java.nio.file.Files
+    val root = Files.createTempDirectory("graft-mr-tree").toFile
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
+    }
+    try {
+      val ctx = "ctx\n".getBytes
+      Files.write(new java.io.File(root, "ctx.txt").toPath, ctx)
+      val line = ("x" * (size - 1) + "\n").getBytes
+      (0 until n).foreach { i =>
+        val f = new java.io.File(root, s"d${i % 10}/f$i.txt")
+        f.getParentFile.mkdirs()
+        Files.write(f.toPath, line)
+      }
+      body(root.getAbsolutePath, ctx.length + n.toLong * size)
+    } finally rm(root)
+  }
+
+  private def countJob(name: String, glob: String) = MapReduceJob[Int, Int](
+    name = name, filter = PathGlob(glob),
+    mapper = (_, _, _) => Iterator.single(1),
+    zero = 0, fold = _ + _, merge = _ + _)
+
+  private def fileBytesRead(): Long =
+    Option(org.apache.hadoop.fs.FileSystem.getGlobalStorageStatistics.get("file"))
+      .flatMap(s => Option(s.getLong("bytesRead"))).map(_.longValue).getOrElse(0L)
+
+  test("a corpus the caller cached stays cached after the run") {
+    val corpus = Corpus.fromRecords(spark, virtualTree).cache()
+    try {
+      corpus.count()
+      assert(MapReduceRunner.run(spark, corpus,
+        Seq(countJob("all", "**/*.txt")))("all") == 4)
+      // storageLevel is the CacheManager's entry for this plan
+      assert(corpus.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+        "the runner dropped a cache it did not create")
+    } finally { corpus.unpersist(); () }
+  }
+
+  test("four concurrent jobs read the tree once and leave nothing persisted") {
+    // no eager materialize: the first job to reach a partition builds
+    // its cache block and the others read it, so the filesystem bytes
+    // must stay at one traversal, not one per job
+    val sc = spark.sparkContext
+    sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    spark.catalog.clearCache()
+    withTree(600, 64) { (root, treeBytes) =>
+      val bytes = MapReduceJob[Long, Long](
+        name = "bytes", filter = PathGlob("**/*.txt"),
+        mapper = (_, _, c) => Iterator.single(c.length.toLong),
+        zero = 0L, fold = _ + _, merge = _ + _)
+      val withCtx = MapReduceJob[Int, Int](
+        name = "ctx", filter = PathGlob("*/*.txt"),
+        directoryFiles = Some(PathGlob("ctx.txt")),
+        mapper = (_, parents, _) => Iterator.single(parents.size),
+        zero = 0, fold = _ + _, merge = _ + _)
+      val b0 = fileBytesRead()
+      val res = MapReduceRunner.runOnDirectory(spark, root,
+        Seq(countJob("files", "**/*.txt"), countJob("d3", "d3/*.txt"), bytes, withCtx))
+      val read = fileBytesRead() - b0
+      assert(res == Map("files" -> 601, "d3" -> 60, "bytes" -> treeBytes, "ctx" -> 600))
+      assert(read <= treeBytes * 1.1,
+        s"read $read filesystem bytes for a $treeBytes-byte tree")
+      assert(sc.getPersistentRDDs.isEmpty, sc.getPersistentRDDs.toString)
+    }
+  }
+
+  test("corpus scan is sized by bytes: tiny files share partitions, maxPartitionBytes still splits") {
+    withTree(1000, 100) { (root, treeBytes) =>
+      val dp = spark.sparkContext.defaultParallelism
+      val tiny = Corpus.read(spark, root).rdd.getNumPartitions
+      assert(tiny <= dp, s"$tiny partitions for ${treeBytes}B of tiny files")
+      spark.conf.set("spark.sql.files.maxPartitionBytes", "1024")
+      val split =
+        try Corpus.read(spark, root).rdd.getNumPartitions
+        finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
+      assert(split >= (treeBytes + 1023) / 1024,
+        s"$split partitions for ${treeBytes}B at 1 KB per partition")
+    }
+  }
+
+  test("after a run the caller's corpus still lists every input file") {
+    withTree(50, 16) { (root, _) =>
+      val corpus = Corpus.read(spark, root)
+      assert(MapReduceRunner.run(spark, corpus,
+        Seq(countJob("files", "**/*.txt")))("files") == 51)
+      assert(corpus.inputFiles.length == 51)
+    }
+  }
 }

@@ -496,6 +496,20 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("dirfile discovery over Corpus.read: the byte-sized scan still reads only path") {
+    // Corpus.read coalesces its binaryFile scan by bytes; column pruning
+    // must reach the scan through the coalesce, so phase 1 never loads
+    // a file's content
+    val probe = mr.ParentStacks.discoveryPlan(
+      sources.Corpus.read(spark, "src/test/resources/refFixtures"),
+      sources.PathGlob("**/*.json"))
+    val p = probe.queryExecution.executedPlan.toString
+    val readSchema = "ReadSchema: [^\\n]*".r.findFirstIn(p).getOrElse("")
+    assert(p.contains("Coalesce"), p.take(2000))
+    assert(readSchema.contains("path") && !readSchema.contains("content"),
+      "discovery scan must not read content\n" + p.take(2000))
+  }
+
   test("mt01: GEMM contraction is an equi-join; argmax is the k-bounded TopK, not a window sort") {
     val p = plan("mt01_sparse_matmul")
     assert(!p.contains("CartesianProduct") &&
